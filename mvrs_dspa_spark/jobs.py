@@ -174,9 +174,18 @@ def run(argv: list[str] | None = None) -> int:
         )
     elif args.job == "unusual_activity":
         from mvrs_dspa_spark.streaming.kmeans import StreamingKMeansModel
+        from mvrs_dspa_spark.tables import table
 
+        # k initial centroids from the lowest-event_id events: the
+        # deterministic init rule of the batch `kmeans_fit`
+        seeds = (
+            J._event_features(table(spark, args.events_dir, "events"))
+            .orderBy("event_id")
+            .limit(settings.clustering.default_k)
+            .collect()
+        )
         model = StreamingKMeansModel(
-            k=settings.clustering.default_k,
+            centroids=[[float(x) for x in r.features] for r in seeds],
             decay=settings.clustering.default_decay,
         )
         q = J.unusual_activity_job(

@@ -19,8 +19,8 @@ same accumulated interactions (test_streaming_als).
 
 State is bounded by (active users x touched items), not event
 volume; the frozen item-factor frame and its k x k Gramian are
-computed once at construction. Compaction hygiene follows the SCD2/
-RFM maintainers.
+computed once at construction. GDPR erasure drops the subject's
+interaction counts AND folded-in factor row (both carry custkey).
 """
 
 from __future__ import annotations
@@ -34,74 +34,54 @@ from mvrs_dspa_spark.operators.mlmodels import (
     _gramian,
     _solve_side,
 )
-
-INTER_SCHEMA = "custkey long, partkey long, cnt long"
-FACTOR_SCHEMA = "custkey long, fac array<double>"
-
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 16
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class AlsFoldInServer:
+class AlsFoldInServer(GridMonitor):
     """Folds new users into a frozen item-factor model, one ridge
-    solve per affected user per batch; serves top-N unseen items."""
+    solve per affected user per batch; serves top-N unseen items.
+    `state` is the per-(user, item) interaction count table."""
 
-    def __init__(
-        self,
-        spark,
-        item_factors: DataFrame,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
+    SCHEMA = "custkey long, partkey long, cnt long"
+    KEYS = ("custkey", "partkey")
+    MERGE = {"cnt": "sum"}
+    USER_KEY = "custkey"
+    EXTRA = ("factors",)
+    COMPACT_TO = 16
+
+    def __init__(self, spark, item_factors: DataFrame) -> None:
+        super().__init__(spark)
         # frozen model: localCheckpoint so every batch reuses the
         # materialized factors instead of re-running their lineage;
         # the k x k Gramian is likewise computed ONCE here (the batch
         # fit collects it per half-step; a frozen model never changes)
         self.items = item_factors.localCheckpoint(eager=True)
         self.items_yty = _gramian(self.items)
-        self.inter: DataFrame = spark.createDataFrame([], INTER_SCHEMA)
-        self.factors: DataFrame = spark.createDataFrame([], FACTOR_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+        self.factors: DataFrame = spark.createDataFrame(
+            [], "custkey long, fac array<double>"
+        )
+
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        """batch_df: (custkey, partkey) interaction events."""
+        return batch_df.groupBy(*self.KEYS).agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        """batch_df: (custkey, partkey) interaction events."""
         if batch_df.isEmpty():
             return
-        delta = batch_df.groupBy("custkey", "partkey").agg(
-            F.count(F.lit(1)).alias("d_cnt")
-        )
-        merged = (
-            self.inter.join(delta, ["custkey", "partkey"], "full_outer")
-            .select(
-                "custkey",
-                "partkey",
-                (
-                    F.coalesce("cnt", F.lit(0))
-                    + F.coalesce("d_cnt", F.lit(0))
-                ).alias("cnt"),
-            )
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "custkey")
-        self.inter = merged.localCheckpoint(eager=True)
-
+        delta = self.delta(batch_df)
+        self._commit(self.merge(delta))
         touched = delta.select("custkey").distinct()
         solved = _solve_side(
-            self.inter.join(F.broadcast(touched), "custkey"),
+            self.state.join(F.broadcast(touched), "custkey"),
             self.items,
             "custkey",
             "partkey",
             self.items_yty,
         )
         kept = self.factors.join(touched, "custkey", "left_anti")
-        factors = kept.unionByName(solved)
-        if factors.rdd.getNumPartitions() > self.compact_cap:
-            factors = factors.repartition(self.compact_to, "custkey")
-        self.factors = factors.localCheckpoint(eager=True)
-        self.n_batches += 1
+        self.factors = self._checkpoint(kept.unionByName(solved))
 
     def recommend(self, n: int = ALS_REC_N) -> DataFrame:
         """Top-n unseen items for every folded-in user (the batch
@@ -117,7 +97,7 @@ class AlsFoldInServer:
             .select("custkey", "partkey", F.round(dot, 6).alias("score"))
         )
         unseen = scored.join(
-            self.inter.select("custkey", "partkey"),
+            self.state.select("custkey", "partkey"),
             ["custkey", "partkey"],
             "left_anti",
         )
@@ -130,21 +110,3 @@ class AlsFoldInServer:
             .select("custkey", "partkey", "rank", "score")
             .orderBy("custkey", "rank")
         )
-
-
-def run_als_fold_in(
-    source: DataFrame, item_factors: DataFrame, checkpoint: str
-) -> AlsFoldInServer:
-    """Drive a bounded interaction stream to completion; returns the
-    server holding folded-in user factors."""
-    server = AlsFoldInServer(source.sparkSession, item_factors)
-    q = (
-        source.writeStream.foreachBatch(server.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("als fold-in stream did not finish within 300s")
-    return server

@@ -28,52 +28,33 @@ from mvrs_dspa_spark.operators.ann import (
     maintenance_cell_stats,
     maintenance_report_from_stats,
 )
-
-STATE_SCHEMA = "cluster int, is_base boolean, n long, s_d2 long"
-
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class AnnMaintenanceMonitor:
+class AnnMaintenanceMonitor(GridMonitor):
     """Maintains per-cell base/delta occupancy + exact distance sums
     for a PINNED integer-grid coarse quantizer across micro-batches of
     (vec_id, embedding) rows."""
 
-    def __init__(
-        self,
-        spark,
-        cents: list[list[int]],
-        mod: int = ANN_INCR_MOD,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
+    SCHEMA = "cluster int, is_base boolean, n long, s_d2 long"
+    KEYS = ("cluster", "is_base")
+    MERGE = {"n": "sum", "s_d2": "sum"}
+    # load(spark, path, cents): the path comes before the quantizer
+    LOAD_PATH_ARG = 0
+
+    def __init__(self, spark, cents: list[list[int]], mod: int = ANN_INCR_MOD) -> None:
         if not cents:
             raise ValueError("AnnMaintenanceMonitor needs a trained quantizer")
-        self.spark = spark
+        super().__init__(spark)
         self.cents = [[int(x) for x in c] for c in cents]
         self.mod = mod
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
 
-    def _merge(self, delta: DataFrame) -> None:
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("cluster", "is_base")
-            .agg(F.sum("n").alias("n"), F.sum("s_d2").alias("s_d2"))
-            .where(F.col("n") > 0)  # fully-erased cells leave no row
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "cluster")
-        self.state = merged.localCheckpoint(eager=True)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return maintenance_cell_stats(batch_df, self.cents, self.mod)
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        self._merge(maintenance_cell_stats(batch_df, self.cents, self.mod))
-        self.n_batches += 1
+    def merge(self, delta: DataFrame) -> DataFrame:
+        # fully-erased cells leave no row
+        return super().merge(delta).where(F.col("n") > 0)
 
     def erase_vectors(self, vectors_df: DataFrame) -> None:
         """Subtract the exact contribution of the given
@@ -81,51 +62,12 @@ class AnnMaintenanceMonitor:
         they accumulate."""
         if vectors_df.isEmpty():
             return
-        gone = maintenance_cell_stats(
-            vectors_df, self.cents, self.mod
-        ).select(
-            "cluster",
-            "is_base",
-            (-F.col("n")).alias("n"),
-            (-F.col("s_d2")).alias("s_d2"),
+        gone = self.delta(vectors_df).select(
+            *self.KEYS, *[(-F.col(c)).alias(c) for c in self.MERGE]
         )
-        self._merge(gone)
+        self.state = self._checkpoint(self.merge(gone))
 
     def report(self) -> DataFrame:
         """The maintenance report through the SAME serving tail as the
         registered #87 batch query."""
         return maintenance_report_from_stats(self.state)
-
-    def save(self, path: str) -> None:
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(
-        cls, spark, path: str, cents: list[list[int]], **kw
-    ) -> "AnnMaintenanceMonitor":
-        mon = cls(spark, cents, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("cluster", "is_base", "n", "s_d2")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_ann_maintenance_stream(
-    source: DataFrame, checkpoint: str, cents: list[list[int]]
-) -> AnnMaintenanceMonitor:
-    """Drive a bounded (vec_id, embedding) stream to completion
-    against a trained quantizer; returns the monitor holding the
-    final per-cell stats."""
-    monitor = AnnMaintenanceMonitor(source.sparkSession, cents)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("ann-maintenance stream did not finish in 300s")
-    return monitor

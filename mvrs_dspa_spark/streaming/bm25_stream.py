@@ -7,11 +7,12 @@ State is exactly the batch plan's intermediates — (a) the
 filter-before-explode posting relation (doc_id, dl, tok, tf) for the
 query vocabulary, bounded by |docs| x |terms| rows (appended
 per-batch: each document contributes its postings once), and (b) the
-1-row corpus stats as exact integer accumulators (n_docs, sum_dl).
-`report()` serves through the SHARED `bm25_from_postings` scoring
-tail with avgdl = sum_dl / n_docs — the same double the batch query's
-AVG(dl) produces while sum_dl < 2^53 (integer-valued doubles sum
-exactly, so summation order cannot move it), hence a replayed corpus
+per-doc length table (doc_id, dl), whose exact integer COUNT and SUM
+are the corpus stats (n_docs, sum_dl). `report()` serves through the
+SHARED `bm25_from_postings` scoring tail with avgdl = sum_dl / n_docs
+— the same double the batch query's AVG(dl) produces while
+sum_dl < 2^53 (integer-valued doubles sum exactly, so summation order
+cannot move it), hence a replayed corpus
 reproduces the registered batch ranking BIT-FOR-BIT (pytest-pinned,
 along with replay-order independence and save/load restart).
 
@@ -32,37 +33,24 @@ from mvrs_dspa_spark.operators.retrieval import (
     TOP_N,
     bm25_from_postings,
 )
-
-POSTINGS_SCHEMA = "doc_id long, dl int, tok string, tf long"
-DOCLEN_SCHEMA = "doc_id long, dl int"
-
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class Bm25IndexMaintainer:
-    """Accumulates query-vocabulary postings + corpus stats across
-    micro-batches; `report()` serves the batch query's exact ranked
-    table."""
+class Bm25IndexMaintainer(GridMonitor):
+    """Accumulates query-vocabulary postings (`state`) + per-doc
+    lengths (`doclen`) across micro-batches; `report()` serves the
+    batch query's exact ranked table."""
 
-    def __init__(
-        self,
-        spark,
-        terms: tuple[str, ...] = GATE_QUERY_TERMS,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
+    SCHEMA = "doc_id long, dl int, tok string, tf long"
+    KEYS = ("doc_id", "tok")
+    EXTRA = ("doclen",)
+
+    def __init__(self, spark, terms: tuple[str, ...] = GATE_QUERY_TERMS) -> None:
+        super().__init__(spark)
         self.terms = tuple(terms)
-        self.postings: DataFrame = spark.createDataFrame([], POSTINGS_SCHEMA)
         # per-doc lengths (every doc, postings or not): the stats
         # source AND what makes erasure exact for posting-free docs
-        self.doclen: DataFrame = spark.createDataFrame([], DOCLEN_SCHEMA)
-        self.n_docs = 0
-        self.sum_dl = 0
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+        self.doclen: DataFrame = spark.createDataFrame([], "doc_id long, dl int")
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -71,21 +59,14 @@ class Bm25IndexMaintainer:
             "doc_id", T.tokens_col(F.lower(F.col("text"))).alias("toks")
         )
         # ONE tokenize pass per micro-batch (r11): the projection feeds
-        # three consumers (doclen union, the n/sum-dl stats agg, the
-        # postings delta), each of which re-ran the tokenize before —
-        # the eager checkpoint materializes the batch-bounded token
-        # arrays once and every consumer reads the materialized rows.
+        # both the doclen union and the postings delta, and the eager
+        # checkpoint materializes the batch-bounded token arrays once
         dl = toks.select(
             "doc_id", "toks", F.size("toks").alias("dl")
         ).localCheckpoint(eager=True)
-        new_doclen = self.doclen.unionByName(dl.select("doc_id", "dl"))
-        if new_doclen.rdd.getNumPartitions() > self.compact_cap:
-            new_doclen = new_doclen.repartition(self.compact_to, "doc_id")
-        self.doclen = new_doclen.localCheckpoint(eager=True)
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-        ).collect()[0]
+        self.doclen = self._checkpoint(
+            self.doclen.unionByName(dl.select("doc_id", "dl"))
+        )
         term_arr = F.array(*[F.lit(t) for t in self.terms])
         delta = (
             dl.select(
@@ -101,83 +82,36 @@ class Bm25IndexMaintainer:
             .groupBy("doc_id", "dl", "tok")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
-        merged = self.postings.unionByName(delta)
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "tok")
-        self.postings = merged.localCheckpoint(eager=True)
-        self.n_docs += int(stats.n)
-        self.sum_dl += int(stats.s)
-        self.n_batches += 1
+        # append-only: each document contributes its postings once
+        self._commit(self.state.unionByName(delta))
+
+    @property
+    def n_docs(self) -> int:
+        return self.doclen.count()
+
+    @property
+    def sum_dl(self) -> int:
+        return self.doclen.agg(F.coalesce(F.sum("dl"), F.lit(0))).first()[0]
 
     def report(self, top_n: int = TOP_N) -> DataFrame:
         """Ranked BM25 table through the SAME scoring tail the batch
-        query uses, from the maintained index."""
-        stats = self.spark.createDataFrame(
-            [(self.n_docs, self.sum_dl)], "n_docs long, sum_dl long"
-        ).select(
-            "n_docs",
-            (F.col("sum_dl") / F.col("n_docs").cast("double")).alias(
-                "avgdl"
-            ),
+        query uses, from the maintained index (avgdl is NULL, not a
+        division by zero, while the index is empty)."""
+        n = F.count(F.lit(1))
+        stats = self.doclen.agg(
+            n.alias("n_docs"), (F.sum("dl") / n.cast("double")).alias("avgdl")
         )
-        return bm25_from_postings(self.postings, stats, top_n)
+        return bm25_from_postings(self.state, stats, top_n)
 
     def erase_docs(self, doc_ids) -> None:
         """GDPR/right-to-be-forgotten for the index: drop the docs'
-        postings AND back out their dl/doc contributions from the
-        stats accumulators via the per-doc length table (exact for
-        EVERY doc, including posting-free ones — unlike the
-        counts-only drift grids)."""
+        postings AND their per-doc length rows, which backs their
+        dl/doc contributions out of the stats (exact for EVERY doc,
+        including posting-free ones — unlike the counts-only drift
+        grids)."""
         ids = [int(d) for d in doc_ids]
         if not ids:
             return
-        gone = self.doclen.where(F.col("doc_id").isin(ids)).collect()
-        self.postings = self.postings.where(
-            ~F.col("doc_id").isin(ids)
-        ).localCheckpoint(eager=True)
-        self.doclen = self.doclen.where(
-            ~F.col("doc_id").isin(ids)
-        ).localCheckpoint(eager=True)
-        self.n_docs -= len(gone)
-        self.sum_dl -= sum(r.dl for r in gone)
-
-    def save(self, path: str) -> None:
-        """Persist the index for driver-restart durability."""
-        self.postings.write.mode("overwrite").parquet(f"{path}/postings")
-        self.doclen.write.mode("overwrite").parquet(f"{path}/doclen")
-        self.spark.createDataFrame(
-            [(self.n_docs, self.sum_dl)], "n_docs long, sum_dl long"
-        ).write.mode("overwrite").parquet(f"{path}/stats")
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "Bm25IndexMaintainer":
-        mon = cls(spark, **kw)
-        mon.postings = (
-            spark.read.parquet(f"{path}/postings")
-            .select("doc_id", "dl", "tok", "tf")
-            .localCheckpoint(eager=True)
-        )
-        mon.doclen = (
-            spark.read.parquet(f"{path}/doclen")
-            .select("doc_id", "dl")
-            .localCheckpoint(eager=True)
-        )
-        r = spark.read.parquet(f"{path}/stats").collect()[0]
-        mon.n_docs, mon.sum_dl = int(r.n_docs), int(r.sum_dl)
-        return mon
-
-
-def run_bm25_stream(source: DataFrame, checkpoint: str) -> Bm25IndexMaintainer:
-    """Drive a bounded document stream to completion; returns the
-    maintainer holding the final index."""
-    mon = Bm25IndexMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(mon.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("bm25 stream did not finish within 300s")
-    return mon
+        keep = ~F.col("doc_id").isin(ids)
+        self.state = self.state.where(keep).localCheckpoint(eager=True)
+        self.doclen = self.doclen.where(keep).localCheckpoint(eager=True)

@@ -10,6 +10,8 @@ grids are bounded by the value domain), NOT by event volume — and
 serving runs the SHARED `cusum_from_hourly` tail, so a replayed log
 reproduces the batch changepoint table EXACTLY (batch==stream pin;
 the peak statistic n*prefix - k*total is decimal-exact on the grid).
+The grid holds per-hour aggregate cent sums with no per-user
+attribution, so erasure is the base's documented no-op.
 
 Completes the continuous drift/monitoring family: PSI (29af), theta
 (29ag), W1 (29ah), reservoir (29ai), Bloom (29aj).
@@ -24,45 +26,22 @@ from mvrs_dspa_spark.plans.analytics import (
     cusum_cents_col,
     cusum_from_hourly,
 )
-
-STATE_SCHEMA = "event_type string, hour timestamp, x_c long"
-
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class CusumMonitor:
+class CusumMonitor(GridMonitor):
     """Maintains the additive hourly cent-sum grid across
     micro-batches; `report()` serves the changepoint table in the
     batch query's shape via the shared tail."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    SCHEMA = "event_type string, hour timestamp, x_c long"
+    KEYS = ("event_type", "hour")
+    MERGE = {"x_c": "sum"}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = batch_df.groupBy(
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("hour")
         ).agg(F.sum(cusum_cents_col()).alias("x_c"))
-        merged = (
-            self.state.unionByName(delta)
-            .groupBy("event_type", "hour")
-            .agg(F.sum("x_c").alias("x_c"))
-        )
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "event_type")
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
 
     def report(self) -> DataFrame:
         """The changepoint table through the SAME serving tail as
@@ -79,39 +58,3 @@ class CusumMonitor:
         )
 
         return segmented_trend_from_cells(self.state)
-
-    def erase_users(self, user_ids) -> None:
-        """No-op by construction (see PsiMonitor.erase_users): the
-        grid holds per-hour aggregate cent sums with no per-user
-        attribution, so there is nothing subject-linked to delete;
-        erasure happens upstream on the retained event log."""
-
-    def save(self, path: str) -> None:
-        """Persist the hourly grid for driver-restart durability."""
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "CusumMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select("event_type", "hour", "x_c")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_cusum_stream(source: DataFrame, checkpoint: str) -> CusumMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final hourly grid."""
-    monitor = CusumMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("cusum stream did not finish within 300s")
-    return monitor

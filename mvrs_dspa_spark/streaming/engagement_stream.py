@@ -12,7 +12,8 @@ idempotence: replaying a batch that adds no new pairs must not
 change the state (the set-merge absorbs duplicates, which is what
 makes at-least-once delivery safe for this metric).
 
-Same compaction + GDPR-erasure hygiene as the other maintainers.
+GDPR erasure drops the subject's activity days from every future
+serving.
 """
 
 from __future__ import annotations
@@ -20,59 +21,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mvrs_dspa_spark.streaming.scd2_stream import (
-    COMPACT_PARTITION_CAP,
-    COMPACT_TO,
-)
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 _DAY_US = 86_400_000_000
 
-PAIRS_SCHEMA = "user_id long, day long"
 
-
-class EngagementMaintainer:
+class EngagementMaintainer(GridMonitor):
     """Accumulates the distinct (user, day) activity set across
     micro-batches; `stickiness()` serves the DAU/WAU table."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.pairs: DataFrame = spark.createDataFrame([], PAIRS_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    SCHEMA = "user_id long, day long"
+    KEYS = ("user_id", "day")
+    USER_KEY = "user_id"
+    COMPACT_TO = 16
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = batch_df.select(
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(
             "user_id",
             F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
         ).distinct()
-        merged = self.pairs.unionByName(delta).distinct()
-        if merged.rdd.getNumPartitions() > self.compact_cap:
-            merged = merged.repartition(self.compact_to, "user_id")
-        self.pairs = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR erasure (see `scd2_stream.Scd2Maintainer.erase_users`):
-        the subject's activity days vanish from every future serving."""
-        ids = list(user_ids)
-        self.pairs = self.pairs.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
 
     def stickiness(self) -> DataFrame:
         """The DAU/WAU table in the batch operator's shape, served
         from the maintained pair set (same offset-explode rollup)."""
-        cover = self.pairs.select(
+        cover = self.state.select(
             "user_id",
             "day",
             F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"),
@@ -80,7 +52,7 @@ class EngagementMaintainer:
         wau = cover.groupBy("day").agg(
             F.countDistinct("user_id").alias("wau")
         )
-        dau = self.pairs.groupBy("day").agg(
+        dau = self.state.groupBy("day").agg(
             F.count(F.lit(1)).alias("dau")
         )
         return (
@@ -95,21 +67,3 @@ class EngagementMaintainer:
             )
             .orderBy("day")
         )
-
-
-def run_engagement_stream(
-    source: DataFrame, checkpoint: str
-) -> EngagementMaintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the distinct activity set."""
-    maintainer = EngagementMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("engagement stream did not finish within 300s")
-    return maintainer

@@ -2,11 +2,11 @@
 form of `plans/analytics2.markov_attribution`, #131).
 
 State is TWO bounded frames:
-- the ADDITIVE (src, dst, n) transition-count grid — domain-bounded
+- `state`: the ADDITIVE (src, dst, n) transition-count grid — domain-bounded
   (|states|+2 cells squared, never event-volume-bounded; int64
   merges in any order), holding every CLOSED transition;
-- the per-user (user_id, ts_us, event_id, last_type) open-journey
-  frame — user-dimension-bounded (the 29ac/29ao state class), holding
+- `last`: the per-user (user_id, ts_us, event_id, last_type)
+  open-journey frame — user-dimension-bounded (the 29ac/29ao state class), holding
   each journey's last event so the NEXT batch can close the boundary
   transition.
 
@@ -26,7 +26,9 @@ GDPR erasure is hybrid and documented: dropping a subject's
 open-journey row is REAL (their pending 'null' closure leaves every
 future report), while their already-closed transitions live only as
 counts in the aggregate grid (the PSI/CUSUM counts-only posture —
-no per-user attribution to delete).
+no per-user attribution to delete). The shared erasure drops
+USER_KEY rows from every frame that carries the column, which here
+is `last` alone.
 """
 
 from __future__ import annotations
@@ -38,29 +40,23 @@ from mvrs_dspa_spark.plans.analytics2 import (
     _mk_cells_exprs_weighted,
     markov_table_from_cells,
 )
-
-GRID_SCHEMA = "src string, dst string, n long"
-LAST_SCHEMA = "user_id long, ts_us long, event_id long, last_type string"
-
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 8
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class MarkovMonitor:
+class MarkovMonitor(GridMonitor):
     """Maintains the transition grid + open-journey frame."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.grid: DataFrame = spark.createDataFrame([], GRID_SCHEMA)
-        self.last: DataFrame = spark.createDataFrame([], LAST_SCHEMA)
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    SCHEMA = "src string, dst string, n long"
+    KEYS = ("src", "dst")
+    MERGE = {"n": "sum"}
+    USER_KEY = "user_id"
+    EXTRA = ("last",)
+
+    def __init__(self, spark) -> None:
+        super().__init__(spark)
+        self.last: DataFrame = spark.createDataFrame(
+            [], "user_id long, ts_us long, event_id long, last_type string"
+        )
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -113,12 +109,7 @@ class MarkovMonitor:
         deltas = (
             intra.unionByName(boundary)
             .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        grid = (
-            self.grid.unionByName(deltas)
-            .groupBy("src", "dst")
-            .agg(F.sum("n").cast("long").alias("n"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
         # open-journey frame: the batch's last event per user replaces
         # the carried row (struct-max keeps the latest (ts, event_id))
@@ -145,13 +136,9 @@ class MarkovMonitor:
                 F.col("m.last_type").alias("last_type"),
             )
         )
-        if last.rdd.getNumPartitions() > self.compact_cap:
-            last = last.repartition(self.compact_to, "user_id")
-        if grid.rdd.getNumPartitions() > self.compact_cap:
-            grid = grid.repartition(self.compact_to, "src")
-        self.grid = grid.localCheckpoint(eager=True)
-        self.last = last.localCheckpoint(eager=True)
-        self.n_batches += 1
+        grid = self.merge(deltas)
+        self.last = self._checkpoint(last)
+        self._commit(grid)
 
     def report(self) -> DataFrame:
         """The attribution table through the SHARED Cramer tail: grid
@@ -162,54 +149,7 @@ class MarkovMonitor:
         ).selectExpr(
             "last_type AS src", "'null' AS dst", "CAST(1 AS LONG) AS n"
         )
-        counts = self.grid.unionByName(closures)
+        counts = self.state.unionByName(closures)
         return markov_table_from_cells(
             counts.selectExpr(*_mk_cells_exprs_weighted())
         )
-
-    def erase_users(self, user_ids) -> None:
-        """Hybrid erasure: the subjects' open-journey rows drop (their
-        pending 'null' closure leaves every served report — REAL);
-        their closed transitions exist only as aggregate grid counts
-        with no per-user attribution (counts-only posture)."""
-        ids = [int(u) for u in user_ids]
-        if not ids:
-            return
-        gone = self.spark.createDataFrame([(u,) for u in ids], "gone long")
-        self.last = self.last.join(
-            gone, self.last["user_id"] == gone["gone"], "left_anti"
-        ).localCheckpoint(eager=True)
-
-    def save(self, path: str) -> None:
-        self.grid.write.mode("overwrite").parquet(f"{path}/grid")
-        self.last.write.mode("overwrite").parquet(f"{path}/last")
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "MarkovMonitor":
-        mon = cls(spark, **kw)
-        mon.grid = (
-            spark.read.parquet(f"{path}/grid")
-            .select("src", "dst", "n")
-            .localCheckpoint(eager=True)
-        )
-        mon.last = (
-            spark.read.parquet(f"{path}/last")
-            .select("user_id", "ts_us", "event_id", "last_type")
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_markov_stream(source: DataFrame, checkpoint: str) -> MarkovMonitor:
-    """Drive a bounded time-ordered event stream to completion."""
-    monitor = MarkovMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("markov stream did not finish within 300s")
-    return monitor

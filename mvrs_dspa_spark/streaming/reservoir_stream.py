@@ -13,6 +13,11 @@ distributed replay.
 
 Serving runs the SAME `reservoir_rank` tail as the batch query;
 priorities come from the SHARED `reservoir_priorities` projection.
+
+GDPR erasure drops the subjects' sampled rows. It is lossy in the
+same documented sense as ThetaMonitor: evicted ranks are not refilled
+from rows already discarded, so the sample shrinks below k until
+natural re-insertion (pytest-pinned).
 """
 
 from __future__ import annotations
@@ -25,22 +30,23 @@ from mvrs_dspa_spark.operators.sampling import (
     reservoir_priorities,
     reservoir_rank,
 )
-
-STATE_SCHEMA = (
-    "event_id long, user_id long, event_type string, "
-    "value double, priority long"
-)
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class ReservoirMonitor:
+class ReservoirMonitor(GridMonitor):
     """Maintains the bottom-k priority rows across micro-batches;
     `report()` serves the ranked sample in the batch query's shape."""
 
+    SCHEMA = (
+        "event_id long, user_id long, event_type string, "
+        "value double, priority long"
+    )
+    KEYS = ("event_id",)
+    USER_KEY = "user_id"
+
     def __init__(self, spark, k: int = RESERVOIR_K) -> None:
-        self.spark = spark
+        super().__init__(spark)
         self.k = k
-        self.state: DataFrame = spark.createDataFrame([], STATE_SCHEMA)
-        self.n_batches = 0
 
     def _prune(self, df: DataFrame) -> DataFrame:
         w = Window.orderBy("priority", "event_id")
@@ -50,65 +56,15 @@ class ReservoirMonitor:
             .drop("rn")
         )
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         # per-batch prune BEFORE the state union: only a batch's own
         # bottom-k can enter the merged bottom-k (k-row state either
         # way; the prune keeps the union 2k rows, not state+batch)
-        delta = self._prune(reservoir_priorities(batch_df))
-        merged = self._prune(self.state.unionByName(delta))
-        self.state = merged.localCheckpoint(eager=True)
-        self.n_batches += 1
+        return self._prune(reservoir_priorities(batch_df))
+
+    def merge(self, delta: DataFrame) -> DataFrame:
+        return self._prune(self.state.unionByName(delta))
 
     def report(self) -> DataFrame:
         """The ranked sample through the SAME serving tail as #113."""
         return reservoir_rank(self.state)
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR erasure: drop the subjects' sampled rows. Lossy in the
-        same documented sense as ThetaMonitor — evicted ranks are not
-        refilled from rows already discarded, so the sample shrinks
-        below k until natural re-insertion (pytest-pinned)."""
-        ids = [int(u) for u in user_ids]
-        if not ids:
-            return
-        gone = self.spark.createDataFrame(
-            [(u,) for u in ids], "gone long"
-        )
-        self.state = self.state.join(
-            gone, self.state["user_id"] == gone["gone"], "left_anti"
-        ).localCheckpoint(eager=True)
-
-    def save(self, path: str) -> None:
-        """Persist the k-row sample state for driver-restart
-        durability (see PsiMonitor.save)."""
-        self.state.write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str, **kw) -> "ReservoirMonitor":
-        mon = cls(spark, **kw)
-        mon.state = (
-            spark.read.parquet(path)
-            .select(
-                "event_id", "user_id", "event_type", "value", "priority"
-            )
-            .localCheckpoint(eager=True)
-        )
-        return mon
-
-
-def run_reservoir_stream(source: DataFrame, checkpoint: str) -> ReservoirMonitor:
-    """Drive a bounded event stream to completion; returns the monitor
-    holding the final bottom-k sample state."""
-    monitor = ReservoirMonitor(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(monitor.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("reservoir stream did not finish within 300s")
-    return monitor

@@ -17,6 +17,16 @@ the same merge writes through a Delta/Iceberg MERGE instead. The
 batch==stream equality test pins that replaying the event log in
 ordered micro-batches produces EXACTLY the batch-built SCD2 table —
 rows, intervals, flags, and version numbers.
+
+GDPR right-to-be-forgotten for this STREAMING state (the stateful
+twin of `validation.gdpr_erasure_audit`) is the shared
+`GridMonitor.erase_users`: every dimension row of the requested
+subjects drops from the checkpointed history. Deletion requests
+arrive out-of-band of the event stream, so this is an operator API,
+not a batch transform; if the subject reappears later, their history
+restarts from scratch (version 1) — exactly the erase-then-new
+semantics the regulation requires. At cluster scale the same
+contract is a MERGE DELETE on the dimension table.
 """
 
 from __future__ import annotations
@@ -24,51 +34,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-HISTORY_SCHEMA = (
-    "user_id long, state string, valid_from timestamp, "
-    "valid_to timestamp, is_current boolean, version long"
-)
-
-# Long-run hygiene: every batch unions (untouched ∪ recomputed), so the
-# checkpointed history's partition count grows by ~shuffle_partitions
-# per batch — after thousands of batches the dimension would be carved
-# into thousands of splinter partitions (per-task overhead dominates,
-# the exact small-file problem OPTIMIZE fixes on disk). When the count
-# crosses the cap, compact back to `compact_to` partitions hashed on
-# user_id BEFORE the checkpoint, so the next batch's per-user joins
-# start from a sane layout. Amortized cost: one bounded-table shuffle
-# every ~cap/shuffle_partitions batches.
-COMPACT_PARTITION_CAP = 64
-COMPACT_TO = 16
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
 
 
-class Scd2Maintainer:
+class Scd2Maintainer(GridMonitor):
     """Accumulates the SCD2 history across micro-batches."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.history: DataFrame = spark.createDataFrame([], HISTORY_SCHEMA)
-        self.n_batches = 0
-        self.n_compactions = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    SCHEMA = (
+        "user_id long, state string, valid_from timestamp, "
+        "valid_to timestamp, is_current boolean, version long"
+    )
+    KEYS = ("user_id",)
+    USER_KEY = "user_id"
+    # every batch unions (untouched ∪ recomputed), so the history's
+    # partition count grows by ~shuffle_partitions per batch; after
+    # thousands of batches the dimension would be carved into
+    # splinter partitions (the small-file problem OPTIMIZE fixes on
+    # disk), hence the shared compaction, to 16 here
+    COMPACT_TO = 16
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         affected = batch_df.select("user_id").distinct()
 
+        mine = self.state.join(affected, "user_id", "left_semi")
+        closed = mine.where(~F.col("is_current"))
         # seed: each affected user's open row, replayed ahead of the
         # batch (event_id -1 sorts before any real event at equal ts)
-        open_rows = self.history.join(affected, "user_id", "left_semi").where(
-            F.col("is_current")
-        )
-        seeds = open_rows.select(
+        seeds = mine.where(F.col("is_current")).select(
             "user_id",
             F.col("state"),
             F.col("valid_from").alias("ts"),
@@ -94,11 +88,8 @@ class Scd2Maintainer:
         )
         w2 = Window.partitionBy("user_id").orderBy("valid_from")
         # versions continue from each user's closed-row count
-        offsets = (
-            self.history.join(affected, "user_id", "left_semi")
-            .where(~F.col("is_current"))
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_closed"))
+        offsets = closed.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_closed")
         )
         recomputed = (
             changes.withColumn(
@@ -118,51 +109,8 @@ class Scd2Maintainer:
                 ),
             )
         )
-        untouched = self.history.join(
-            affected, "user_id", "left_anti"
-        ).unionByName(
-            # affected users' CLOSED rows stay as-is
-            self.history.join(affected, "user_id", "left_semi").where(
-                ~F.col("is_current")
-            )
+        # untouched users' rows and affected users' CLOSED rows stay
+        untouched = self.state.join(affected, "user_id", "left_anti")
+        self._commit(
+            untouched.unionByName(closed).unionByName(recomputed)
         )
-        new_hist = untouched.unionByName(recomputed)
-        if new_hist.rdd.getNumPartitions() > self.compact_cap:
-            new_hist = new_hist.repartition(self.compact_to, "user_id")
-            self.n_compactions += 1
-        self.history = new_hist.localCheckpoint(eager=True)
-        self.n_batches += 1
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR right-to-be-forgotten enforcement for STREAMING state
-        (the stateful twin of `validation.gdpr_erasure_audit`): drop
-        every dimension row of the requested subjects from the
-        checkpointed history. Deletion requests arrive out-of-band of
-        the event stream, so this is an operator API, not a batch
-        transform; if the subject reappears later, their history
-        restarts from scratch (version 1) — exactly the erase-then-new
-        semantics the regulation requires. The filter is a broadcast
-        NOT-IN over the (small) request list; at cluster scale the
-        same contract is a MERGE DELETE on the dimension table."""
-        ids = list(user_ids)
-        self.history = self.history.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
-
-
-def run_scd2_stream(source: DataFrame, checkpoint: str) -> Scd2Maintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the final SCD2 history."""
-    maintainer = Scd2Maintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("scd2 stream did not finish within 300s")
-    return maintainer

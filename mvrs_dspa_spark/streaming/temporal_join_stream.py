@@ -19,7 +19,9 @@ covered — so per-batch enrichment equals the batch operator exactly
 At cluster scale the history side is a user_id-bucketed dimension
 table (Delta/Iceberg) and the per-batch join is the standard
 stream-table temporal join shape; here both sides live as DataFrames
-with the same compaction hygiene as the other maintainers.
+with the same compaction hygiene as the other maintainers. GDPR
+erasure covers BOTH maintained states: the SCD2 dimension rows and
+the enriched event ledger of the requested subjects.
 """
 
 from __future__ import annotations
@@ -27,94 +29,58 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mvrs_dspa_spark.streaming.scd2_stream import (
-    COMPACT_PARTITION_CAP,
-    COMPACT_TO,
-    Scd2Maintainer,
-)
-
-ENRICHED_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, prior_state string"
-)
+from mvrs_dspa_spark.streaming.monitor import GridMonitor
+from mvrs_dspa_spark.streaming.scd2_stream import Scd2Maintainer
 
 
-class TemporalJoinMaintainer:
-    """Maintains the SCD2 dimension AND the temporally-enriched event
-    ledger across micro-batches."""
+class TemporalJoinMaintainer(GridMonitor):
+    """Maintains the SCD2 dimension (`scd2`) AND the temporally-
+    enriched event ledger (`state`) across micro-batches."""
 
-    def __init__(
-        self,
-        spark,
-        compact_cap: int = COMPACT_PARTITION_CAP,
-        compact_to: int = COMPACT_TO,
-    ) -> None:
-        self.spark = spark
-        self.scd2 = Scd2Maintainer(
-            spark, compact_cap=compact_cap, compact_to=compact_to
-        )
-        self.enriched: DataFrame = spark.createDataFrame(
-            [], ENRICHED_SCHEMA
-        )
-        self.n_batches = 0
-        self.compact_cap = compact_cap
-        self.compact_to = compact_to
+    SCHEMA = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, prior_state string"
+    )
+    KEYS = ("user_id",)
+    USER_KEY = "user_id"
+    EXTRA = ("scd2",)
+    COMPACT_TO = 16
+
+    def __init__(self, spark) -> None:
+        super().__init__(spark)
+        self.scd2 = Scd2Maintainer(spark)
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         self.scd2.update(batch_df, batch_id)
-        hist = self.scd2.history.select(
+        hist = self.scd2.state.select(
             F.col("user_id").alias("h_user_id"),
             F.col("state").alias("prior_state"),
             "valid_from",
             "valid_to",
         )
-        enriched = (
-            batch_df.join(
-                hist,
-                (batch_df["user_id"] == hist["h_user_id"])
-                & (hist["valid_from"] < batch_df["ts"])
-                & (
-                    hist["valid_to"].isNull()
-                    | (batch_df["ts"] <= hist["valid_to"])
-                ),
-                "left",
-            )
-            .select(
-                "event_id",
-                "ts",
-                "user_id",
-                "event_type",
-                "value",
-                F.coalesce("prior_state", F.lit("none")).alias(
-                    "prior_state"
-                ),
-            )
+        enriched = batch_df.join(
+            hist,
+            (batch_df["user_id"] == hist["h_user_id"])
+            & (hist["valid_from"] < batch_df["ts"])
+            & (hist["valid_to"].isNull() | (batch_df["ts"] <= hist["valid_to"])),
+            "left",
+        ).select(
+            "event_id",
+            "ts",
+            "user_id",
+            "event_type",
+            "value",
+            F.coalesce("prior_state", F.lit("none")).alias("prior_state"),
         )
-        new_ledger = self.enriched.unionByName(enriched)
-        if new_ledger.rdd.getNumPartitions() > self.compact_cap:
-            new_ledger = new_ledger.repartition(self.compact_to, "user_id")
-        self.enriched = new_ledger.localCheckpoint(eager=True)
-        self.n_batches += 1
-
-    def erase_users(self, user_ids) -> None:
-        """GDPR erasure across BOTH maintained states: the SCD2
-        dimension rows and the enriched event ledger of the requested
-        subjects (see `scd2_stream.Scd2Maintainer.erase_users`)."""
-        ids = list(user_ids)
-        self.scd2.erase_users(ids)
-        self.enriched = self.enriched.where(
-            # NULL-safe: ~isin() is NULL for a NULL key, which would
-            # silently erase all null-keyed state too (ADVICE r6)
-            ~F.col("user_id").isin(ids) | F.col("user_id").isNull()
-        ).localCheckpoint(eager=True)
+        self._commit(self.state.unionByName(enriched))
 
     def rollup(self) -> DataFrame:
         """The (prior_state x event_type) summary in the batch
         operator's shape, served from the accumulated ledger."""
         return (
-            self.enriched.groupBy("prior_state", "event_type")
+            self.state.groupBy("prior_state", "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.countDistinct("user_id").alias("n_users"),
@@ -122,21 +88,3 @@ class TemporalJoinMaintainer:
             )
             .orderBy("prior_state", "event_type")
         )
-
-
-def run_temporal_join_stream(
-    source: DataFrame, checkpoint: str
-) -> TemporalJoinMaintainer:
-    """Drive a bounded event stream to completion; returns the
-    maintainer holding the enriched ledger + SCD2 history."""
-    maintainer = TemporalJoinMaintainer(source.sparkSession)
-    q = (
-        source.writeStream.foreachBatch(maintainer.update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("temporal join stream did not finish within 300s")
-    return maintainer

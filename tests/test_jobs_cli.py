@@ -62,6 +62,23 @@ def test_active_posts_cli_end_to_end(spark, tmp_path):
 
 
 @pytest.mark.slow  # subprocess Spark session: ~20-45 s each
+def test_unusual_activity_cli_end_to_end(tmp_path):
+    """The streaming k-means job starts from k centroids seeded off the
+    lowest-event_id events and drains the replay to completion."""
+    r = _run_cli(
+        [
+            "unusual_activity",
+            "--events-dir", SF,
+            "--out", str(tmp_path / "unusual"),
+            "--checkpoint", str(tmp_path / "ckpt"),
+            "--limit", "400",
+        ]
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "unusual_activity: done" in r.stdout
+
+
+@pytest.mark.slow  # subprocess Spark session: ~20-45 s each
 def test_recommendations_cli_end_to_end(spark, tmp_path):
     out = str(tmp_path / "recs")
     r = _run_cli(

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.operators.mlmodels import _gramian, _solve_side
 from mvrs_dspa_spark.streaming.als_stream import (
     AlsFoldInServer,
-    run_als_fold_in,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -97,14 +97,16 @@ def test_fold_in_via_stream_and_serving(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(inter_ev, replay_dir, n_batches=3)
     src = read_replay_stream(spark, replay_dir, inter_ev.schema)
-    server = run_als_fold_in(src, items, str(tmp_path / "ckpt"))
+    server = run_monitor(
+        src, AlsFoldInServer(spark, items), str(tmp_path / "ckpt")
+    )
     assert server.n_batches >= 1
 
     recs = server.recommend(n=3).collect()
     assert recs, "no recommendations served"
     seen = {
         (r.custkey, r.partkey)
-        for r in server.inter.select("custkey", "partkey").collect()
+        for r in server.state.select("custkey", "partkey").collect()
     }
     by_user = {}
     for r in recs:

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics5 import user_capture_recapture
 from mvrs_dspa_spark.streaming.capture_stream import (
     CaptureMonitor,
-    run_capture_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -37,7 +37,9 @@ def test_streaming_capture_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_capture_stream(src, str(tmp_path / "ckpt"), _split_us(ev))
+    mon = run_monitor(
+        src, CaptureMonitor(spark, _split_us(ev)), str(tmp_path / "ckpt")
+    )
     assert mon.n_batches >= 4
     # state is user-dimension-bounded: one row per observed user
     assert (

@@ -14,19 +14,14 @@ from mvrs_dspa_spark.operators.sketches import (
     theta_sketch_distinct_union,
 )
 from mvrs_dspa_spark.plans.analytics import value_drift_psi
-from mvrs_dspa_spark.streaming.psi_stream import PsiMonitor, run_psi_stream
+from mvrs_dspa_spark.streaming.monitor import run_monitor
+from mvrs_dspa_spark.streaming.psi_stream import PsiMonitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
-from mvrs_dspa_spark.streaming.tdigest_stream import (
-    TDigestMonitor,
-    run_tdigest_stream,
-)
-from mvrs_dspa_spark.streaming.theta_stream import (
-    ThetaMonitor,
-    run_theta_stream,
-)
+from mvrs_dspa_spark.streaming.tdigest_stream import TDigestMonitor
+from mvrs_dspa_spark.streaming.theta_stream import ThetaMonitor
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -45,8 +40,8 @@ def test_streaming_psi_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_psi_stream(
-        src, str(tmp_path / "ckpt"), _halfway_split_us(ev)
+    mon = run_monitor(
+        src, PsiMonitor(spark, _halfway_split_us(ev)), str(tmp_path / "ckpt")
     )
     assert mon.n_batches >= 4
 
@@ -69,7 +64,7 @@ def test_streaming_theta_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_theta_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(src, ThetaMonitor(spark), str(tmp_path / "ckpt"))
     assert mon.n_batches >= 4
 
     # bounded state: never more than k codes per (type + union... the
@@ -123,15 +118,16 @@ def test_streaming_wasserstein_equals_batch(spark, tmp_path):
     from mvrs_dspa_spark.plans.analytics4 import value_wasserstein_drift
     from mvrs_dspa_spark.streaming.wasserstein_stream import (
         WassersteinMonitor,
-        run_wasserstein_stream,
     )
 
     ev = table(spark, SF, "events")
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_wasserstein_stream(
-        src, str(tmp_path / "ckpt"), _halfway_split_us(ev)
+    mon = run_monitor(
+        src,
+        WassersteinMonitor(spark, _halfway_split_us(ev)),
+        str(tmp_path / "ckpt"),
     )
     assert mon.n_batches >= 4
 
@@ -264,7 +260,7 @@ def test_streaming_tdigest_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay_td")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_tdigest_stream(src, str(tmp_path / "ckpt_td"))
+    mon = run_monitor(src, TDigestMonitor(spark), str(tmp_path / "ckpt_td"))
     assert mon.n_batches >= 4
 
     want = sorted(

@@ -8,8 +8,8 @@ from __future__ import annotations
 from mvrs_dspa_spark.plans.analytics2 import dau_wau_stickiness
 from mvrs_dspa_spark.streaming.engagement_stream import (
     EngagementMaintainer,
-    run_engagement_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -30,7 +30,9 @@ def test_streaming_engagement_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_engagement_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(
+        src, EngagementMaintainer(spark), str(tmp_path / "ckpt")
+    )
     assert mon.n_batches >= 4
 
     want = _rows(dau_wau_stickiness(spark, SF))
@@ -43,13 +45,13 @@ def test_streaming_engagement_idempotent_and_erasable(spark):
     ev = table(spark, SF, "events").limit(300)
     m = EngagementMaintainer(spark)
     m.update(ev, 0)
-    before = m.pairs.count()
+    before = m.state.count()
     m.update(ev, 1)  # replayed batch: no new pairs
-    assert m.pairs.count() == before
+    assert m.state.count() == before
 
-    victim = m.pairs.select("user_id").first().user_id
-    n_victim = m.pairs.where(f"user_id = {victim}").count()
+    victim = m.state.select("user_id").first().user_id
+    n_victim = m.state.where(f"user_id = {victim}").count()
     assert n_victim > 0
     m.erase_users([victim])
-    assert m.pairs.where(f"user_id = {victim}").count() == 0
-    assert m.pairs.count() == before - n_victim
+    assert m.state.where(f"user_id = {victim}").count() == 0
+    assert m.state.count() == before - n_victim

@@ -7,7 +7,16 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
+from mvrs_dspa_spark.operators.mlmodels import ALS_K
+from mvrs_dspa_spark.streaming.als_stream import AlsFoldInServer
+from mvrs_dspa_spark.streaming.capture_stream import CaptureMonitor
+from mvrs_dspa_spark.streaming.engagement_stream import EngagementMaintainer
+from mvrs_dspa_spark.streaming.markov_stream import MarkovMonitor
+from mvrs_dspa_spark.streaming.reservoir_stream import ReservoirMonitor
 from mvrs_dspa_spark.streaming.rfm_stream import RfmMaintainer
+from mvrs_dspa_spark.streaming.scd2_stream import Scd2Maintainer
 from mvrs_dspa_spark.streaming.temporal_join_stream import (
     TemporalJoinMaintainer,
 )
@@ -38,23 +47,23 @@ def test_scd2_and_ledger_erasure_then_restart(spark):
         ),
         0,
     )
-    assert m.scd2.history.where("user_id = 1").count() == 2
+    assert m.scd2.state.where("user_id = 1").count() == 2
 
     m.erase_users([1])
-    assert m.scd2.history.where("user_id = 1").count() == 0
-    assert m.enriched.where("user_id = 1").count() == 0
+    assert m.scd2.state.where("user_id = 1").count() == 0
+    assert m.state.where("user_id = 1").count() == 0
     # other subjects untouched
-    assert m.scd2.history.where("user_id = 2").count() == 1
-    assert m.enriched.where("user_id = 2").count() == 1
+    assert m.scd2.state.where("user_id = 2").count() == 1
+    assert m.state.where("user_id = 2").count() == 1
 
     # the subject reappears: history restarts at version 1 and the
     # first post-erasure event has no prior state
     m.update(_batch(spark, [(10, 1, "purchase", 5.0)]), 1)
-    hist = m.scd2.history.where("user_id = 1").collect()
+    hist = m.scd2.state.where("user_id = 1").collect()
     assert [(r.state, r.version, r.is_current) for r in hist] == [
         ("purchase", 1, True)
     ]
-    led = m.enriched.where("user_id = 1").collect()
+    led = m.state.where("user_id = 1").collect()
     assert [r.prior_state for r in led] == ["none"]
 
 
@@ -65,19 +74,44 @@ def test_rfm_stats_erasure_then_restart(spark):
     )
     m.update(_batch(spark, [(2, 2, "view", 7.0)]), 1)
     m.erase_users([1])
-    assert m.stats.where("user_id = 1").count() == 0
-    assert m.stats.where("user_id = 2").count() == 1
+    assert m.state.where("user_id = 1").count() == 0
+    assert m.state.where("user_id = 2").count() == 1
 
     m.update(_batch(spark, [(9, 1, "purchase", 10.0)]), 2)
-    row = m.stats.where("user_id = 1").collect()[0]
+    row = m.state.where("user_id = 1").collect()[0]
     assert row.frequency == 1 and row.monetary_sum == 10.0
 
 
-def test_erasure_spares_null_keyed_state(spark):
+# every monitor with a USER_KEY: the erase path is the shared one
+USER_KEYED = (
+    RfmMaintainer,
+    EngagementMaintainer,
+    CaptureMonitor,
+    ReservoirMonitor,
+    Scd2Maintainer,
+    TemporalJoinMaintainer,
+    MarkovMonitor,
+    AlsFoldInServer,
+)
+
+
+def _user_keyed_case(spark, cls, batch):
+    """(monitor, its input batch, the frame that carries USER_KEY)."""
+    if cls is AlsFoldInServer:
+        items = spark.createDataFrame(
+            [(1, [0.1] * ALS_K)], "partkey long, fac array<double>"
+        )
+        inter = batch.selectExpr("user_id AS custkey", "1L AS partkey")
+        return cls(spark, items), inter, "state"
+    mon = cls(spark, 0) if cls is CaptureMonitor else cls(spark)
+    return mon, batch, "last" if cls is MarkovMonitor else "state"
+
+
+@pytest.mark.parametrize("cls", USER_KEYED, ids=lambda c: c.__name__)
+def test_erasure_spares_null_keyed_state(spark, cls):
     """~isin(ids) evaluates to NULL for a NULL key, which silently
     deleted all null-keyed state alongside the requested subjects
     (ADVICE r6): erasure must touch ONLY the named users."""
-    m = RfmMaintainer(spark)
     rows = [
         (0, _BASE, 1, "purchase", 10.0),
         (1, _BASE, 2, "purchase", 20.0),
@@ -90,9 +124,10 @@ def test_erasure_spares_null_keyed_state(spark):
         ],
         SCHEMA,
     )
+    m, batch, frame = _user_keyed_case(spark, cls, batch)
     m.update(batch, 0)
     m.erase_users([1])
-    left = {r.user_id for r in m.stats.select("user_id").collect()}
+    left = {r[0] for r in getattr(m, frame).select(m.USER_KEY).collect()}
     assert 1 not in left
     assert 2 in left
     assert None in left, "null-keyed state must survive a targeted erase"

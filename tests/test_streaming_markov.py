@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from mvrs_dspa_spark.plans.analytics2 import markov_attribution
 from mvrs_dspa_spark.streaming.markov_stream import (
     MarkovMonitor,
-    run_markov_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -30,10 +30,10 @@ def test_streaming_markov_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_markov_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(src, MarkovMonitor(spark), str(tmp_path / "ckpt"))
     assert mon.n_batches >= 4
     # state bounds: grid is domain-bounded, last is user-bounded
-    assert mon.grid.count() <= 7 * 7
+    assert mon.state.count() <= 7 * 7
     assert mon.last.count() == ev.select("user_id").distinct().count()
     assert _rows(mon.report()) == _rows(markov_attribution(spark, SF))
 
@@ -55,7 +55,7 @@ def test_markov_batch_count_invariant(spark):
             & (F.col("us") < lo + (b + 1) * width)
         ).drop("us")
         m5.update(part, b)
-    assert _rows(m1.grid) == _rows(m5.grid)
+    assert _rows(m1.state) == _rows(m5.state)
     assert _rows(m1.report()) == _rows(m5.report())
 
 

@@ -12,8 +12,8 @@ from mvrs_dspa_spark.plans.analytics5 import (
 )
 from mvrs_dspa_spark.streaming.ranktest_stream import (
     RankTestMonitor,
-    run_ranktest_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
@@ -32,7 +32,7 @@ def test_streaming_ranktests_equal_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_ranktest_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(src, RankTestMonitor(spark), str(tmp_path / "ckpt"))
     assert mon.n_batches >= 4
     # one state, FOUR statistics — all equal their batch twins exactly
     assert _rows(mon.report()) == _rows(
@@ -56,7 +56,7 @@ def test_ranktest_replay_order_independent(spark):
         m1.update(b, i)
     for i, b in enumerate(reversed(batches)):
         m2.update(b, i)
-    assert _rows(m1.grid) == _rows(m2.grid)
+    assert _rows(m1.state) == _rows(m2.state)
     assert _rows(m1.report()) == _rows(m2.report())
 
 
@@ -69,6 +69,6 @@ def test_ranktest_save_load_restart(spark, tmp_path):
     m2.update(ev.where(F.col("b") == 1).drop("b"), 1)
     want = RankTestMonitor(spark)
     want.update(ev, 0)
-    assert _rows(m2.grid) == _rows(want.grid)
+    assert _rows(m2.state) == _rows(want.state)
     m2.erase_users([1])  # documented no-op by construction
-    assert _rows(m2.grid) == _rows(want.grid)
+    assert _rows(m2.state) == _rows(want.state)

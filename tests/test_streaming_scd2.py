@@ -13,7 +13,8 @@ from mvrs_dspa_spark.streaming.replay import (
     read_replay_stream,
     write_replay_batches,
 )
-from mvrs_dspa_spark.streaming.scd2_stream import run_scd2_stream
+from mvrs_dspa_spark.streaming.monitor import run_monitor
+from mvrs_dspa_spark.streaming.scd2_stream import Scd2Maintainer
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -61,17 +62,19 @@ def test_streaming_scd2_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(sliced, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, sliced.schema)
-    mon = run_scd2_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(src, Scd2Maintainer(spark), str(tmp_path / "ckpt"))
     assert mon.n_batches >= 4
 
     want = _rows(user_state_history(spark, sliced_dir))
-    got = _rows(mon.history)
+    got = _rows(mon.state)
     assert got == want
     assert len(got) > 0
 
 
 @pytest.mark.slow  # >10 s: slow tier, run with -m slow
-def test_streaming_scd2_history_partitions_stay_bounded(spark, tmp_path):
+def test_streaming_scd2_history_partitions_stay_bounded(
+    spark, tmp_path, monkeypatch
+):
     """Long-run hygiene: each batch unions recomputed rows onto the
     history, which grows the checkpointed partition count without
     bound; the maintainer must compact once the cap is crossed so a
@@ -85,7 +88,9 @@ def test_streaming_scd2_history_partitions_stay_bounded(spark, tmp_path):
     # cap=2 forces the compaction path at test scale (AQE coalescing
     # keeps tiny unions at ~3 partitions; at production scale each
     # union branch is many partitions and the cap is what bounds them)
-    m = Scd2Maintainer(spark, compact_cap=2, compact_to=2)
+    monkeypatch.setattr(Scd2Maintainer, "COMPACT_PARTITION_CAP", 2)
+    monkeypatch.setattr(Scd2Maintainer, "COMPACT_TO", 2)
+    m = Scd2Maintainer(spark)
     step = 30
     for i in range(0, len(rows), step):
         batch = spark.createDataFrame(rows[i : i + step], ev.schema)
@@ -93,12 +98,12 @@ def test_streaming_scd2_history_partitions_stay_bounded(spark, tmp_path):
     assert m.n_batches == len(rows) // step
     assert m.n_compactions >= 1
     # bounded: at most compact_to plus one batch's coalesced growth
-    assert m.history.rdd.getNumPartitions() <= 2 + 2 * int(
+    assert m.state.rdd.getNumPartitions() <= 2 + 2 * int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     # compaction must not corrupt the dimension: exactly one open row
     # per user, versions dense from 1
-    hist = m.history.collect()
+    hist = m.state.collect()
     by_user: dict = {}
     for r in hist:
         by_user.setdefault(r.user_id, []).append(r)

@@ -12,8 +12,8 @@ from mvrs_dspa_spark.streaming.replay import (
 )
 from mvrs_dspa_spark.streaming.sprt_stream import (
     SprtMonitor,
-    run_sprt_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -31,7 +31,7 @@ def test_streaming_sprt_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_sprt_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(src, SprtMonitor(spark), str(tmp_path / "ckpt"))
     assert mon.n_batches >= 4
 
     want = _rows(sequential_ab_sprt(spark, SF))

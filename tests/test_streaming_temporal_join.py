@@ -15,8 +15,8 @@ from mvrs_dspa_spark.streaming.replay import (
 )
 from mvrs_dspa_spark.streaming.temporal_join_stream import (
     TemporalJoinMaintainer,
-    run_temporal_join_stream,
 )
+from mvrs_dspa_spark.streaming.monitor import run_monitor
 from mvrs_dspa_spark.tables import table
 
 SF = "/root/testdata/sf0.001"
@@ -34,7 +34,9 @@ def test_streaming_temporal_join_equals_batch(spark, tmp_path):
     replay_dir = str(tmp_path / "replay")
     write_replay_batches(ev, replay_dir, n_batches=4)
     src = read_replay_stream(spark, replay_dir, ev.schema)
-    mon = run_temporal_join_stream(src, str(tmp_path / "ckpt"))
+    mon = run_monitor(
+        src, TemporalJoinMaintainer(spark), str(tmp_path / "ckpt")
+    )
     assert mon.n_batches >= 4
 
     want = _rows(point_in_time_state_join(spark, SF))
@@ -42,7 +44,7 @@ def test_streaming_temporal_join_equals_batch(spark, tmp_path):
     assert len(got) > 0
     assert got == want
     # the enriched ledger is lossless: one row per input event
-    assert mon.enriched.count() == ev.count()
+    assert mon.state.count() == ev.count()
 
 
 def test_streaming_temporal_join_intra_batch_transition(spark, tmp_path):
@@ -70,6 +72,6 @@ def test_streaming_temporal_join_intra_batch_transition(spark, tmp_path):
     m.update(b0, 0)
     m.update(b1, 1)
     got = {
-        r.event_id: r.prior_state for r in m.enriched.collect()
+        r.event_id: r.prior_state for r in m.state.collect()
     }
     assert got == {1: "none", 2: "view", 3: "click"}
